@@ -97,11 +97,11 @@ def _seg_searcher(spark: SparkSession, sf_dir: str) -> SegmentSearcher:
 
 
 def _engine_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-max WAND over the compressed segment index — the full
-    boolean mix: MUST conjunction (BlockMaxConjunctionScorer path) +
-    SHOULD term + SHOULD exact phrase (phrases run INSIDE the pruned
-    traversal since round 3) + MUST_NOT exclusion; A/B-identical to
-    exhaustive scoring (pytest-gated); bit-exact DuckDB oracle."""
+    """The full boolean mix over the compressed segment index: MUST
+    conjunction + SHOULD term + SHOULD exact phrase + MUST_NOT
+    exclusion, evaluated by the compiled tree in each segment leaf;
+    bit-exact DuckDB oracle. (The row keeps its historical name from
+    the block-max WAND path the tree replaced.)"""
     s = _seg_searcher(spark, sf_dir)
     q = BooleanQuery.of(must=[TermQuery("spark")],
                         should=[TermQuery("vector"),

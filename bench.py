@@ -227,7 +227,7 @@ def bench_engine(spark) -> tuple[dict[str, float], dict[str, float]]:
         batch = {f"q{i}": q for i, q in enumerate(qs)}
         # crossover regime (VERDICT r2 perf #4): at small batches the
         # per-job overhead dominates the compressed path; the LARGE
-        # batch shows where decode-once-per-term block-max WAND pays
+        # batch shows where the decode-once-per-term batch leaf pays
         big = {}
         for i in range(512):
             a = mid[(37 * i) % len(mid)]

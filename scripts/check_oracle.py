@@ -1,8 +1,9 @@
 """Local stand-in for the driver's correctness gate.
 
 Runs every queries() entry at the given sf dir, compares against its
-oracle_sql() via DuckDB: row count, column names, order-insensitive
-value multiset. Prints a per-query verdict + summary.
+oracle_sql() via DuckDB: row count, column names, column types (a
+HUGEINT oracle column fails), order-insensitive value multiset. Prints
+a per-query verdict + summary.
 
 Usage: python scripts/check_oracle.py [sf_dir] [name_filter]
 """
@@ -17,9 +18,41 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
 
-import __spark_entry__ as entrymod
+_DUCK_INTS = ("TINYINT", "SMALLINT", "INTEGER", "BIGINT", "UTINYINT",
+              "USMALLINT", "UINTEGER", "UBIGINT")
+
+
+def oracle_types(con, sql: str) -> dict[str, str]:
+    """{column: DuckDB type} of an oracle query, read with DESCRIBE.
+    The DB-API ``description`` cannot be used: it reports NUMBER for
+    every numeric type, so a HUGEINT column never shows there."""
+    rows = con.execute(f"DESCRIBE {sql.strip().rstrip(';')}").fetchall()
+    return {r[0].lower(): str(r[1]).upper() for r in rows}
+
+
+def type_problems(otypes: dict[str, str], stypes: dict[str, str]) -> list[str]:
+    """Column-type mismatches between an oracle and its Spark query.
+    The driver's value hash is TYPE-sensitive (arrow buffers): an
+    un-CAST integer sum() types HUGEINT in DuckDB and hash-mismatches
+    an int64 Spark column even when the values are identical."""
+    problems = []
+    for col, dt in otypes.items():
+        if "HUGEINT" in dt:
+            problems.append(
+                f"oracle col {col} is {dt} — CAST(... AS BIGINT) it")
+            continue
+        st = stypes.get(col)
+        if st is None:
+            continue
+        d_int = dt in _DUCK_INTS
+        s_int = st in ("tinyint", "smallint", "int", "bigint", "long")
+        d_flt = dt in ("FLOAT", "DOUBLE") or dt.startswith("DECIMAL")
+        s_flt = st in ("float", "double") or st.startswith("decimal")
+        if (d_int and s_flt) or (d_flt and s_int):
+            problems.append(f"type divergence on {col}: spark {st} vs "
+                            f"oracle {dt}")
+    return problems
 
 
 def norm_cell(v):
@@ -67,6 +100,10 @@ def normalize_exact(rows, cols):
 
 
 def main():
+    from pyspark.sql import SparkSession
+
+    import __spark_entry__ as entrymod
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
 
@@ -114,31 +151,13 @@ def main():
             res = con.execute(oracles[name])
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
+            otypes = oracle_types(con, oracles[name])
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: duckdb error: {e}")
             bad += 1
             continue
-        problems = []
-        # The driver's value hash is TYPE-sensitive (arrow buffers): an
-        # un-CAST integer sum() types HUGEINT in DuckDB and hash-mismatches
-        # an int64 Spark column even when values are identical (round-3
-        # lesson — six rows). Catch type divergence pre-driver.
-        dtypes = {d[0].lower(): str(d[1]).upper() for d in res.description}
-        stypes = {c.lower(): t for c, t in sdf.dtypes}
-        for col, dt in dtypes.items():
-            if "HUGEINT" in dt:
-                problems.append(
-                    f"oracle col {col} is {dt} — CAST(... AS BIGINT) it")
-            st = stypes.get(col)
-            if st is None:
-                continue
-            d_int = any(x in dt for x in ("INT",)) and "HUGE" not in dt
-            s_int = st in ("tinyint", "smallint", "int", "bigint", "long")
-            d_flt = any(x in dt for x in ("DOUBLE", "FLOAT", "DECIMAL"))
-            s_flt = st in ("float", "double") or st.startswith("decimal")
-            if (d_int and s_flt) or (d_flt and s_int):
-                problems.append(f"type divergence on {col}: spark {st} vs "
-                                f"oracle {dt}")
+        problems = type_problems(otypes,
+                                 {c.lower(): t for c, t in sdf.dtypes})
         if sorted(c.lower() for c in scols) != sorted(c.lower() for c in dcols):
             problems.append(f"cols {scols} vs {dcols}")
         if len(srows) != len(drows):

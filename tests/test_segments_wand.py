@@ -1,6 +1,7 @@
-"""Codec-v2 segment index + block-max WAND: rank/score identity vs the
-pure-Python oracle, WAND on/off A/B identity (SURVEY §4.2 oracle), and
-kill-and-resume resumability (BASELINE.md resumability row)."""
+"""Codec-v2 segment index + compiled-tree search: rank/score identity
+vs the pure-Python oracle (SURVEY §4.2 oracle) on the single-query,
+batched and serving paths, and kill-and-resume resumability
+(BASELINE.md resumability row)."""
 
 import numpy as np
 import pytest
@@ -90,20 +91,22 @@ def test_disjunction_topk_identical_to_oracle(built):
         (d.docid, np.float32(d.score)) for d in exp]
 
 
-def test_wand_ab_identical(built):
+def test_disjunction_k_sweep_identical_to_oracle(built):
+    """The per-leaf top-k cut and the global merge stay exact from
+    k=1 up to well past the per-segment hit counts."""
     _, searcher, oracle, _ = built
     terms = _terms_by_df(oracle, 5)
     q = BooleanQuery.of(should=[TermQuery(t) for t in terms[:5]])
     for k in (1, 3, 10, 50):
-        a = searcher.search(q, k, use_wand=True)
-        b = searcher.search(q, k, use_wand=False)
-        assert [(d.docid, np.float32(d.score)) for d in a] == [
-            (d.docid, np.float32(d.score)) for d in b], k
+        got = searcher.search(q, k)
+        exp = oracle.search(q, k)
+        assert [(d.docid, np.float32(d.score)) for d in got] == [
+            (d.docid, np.float32(d.score)) for d in exp], k
 
 
 def test_search_many_identical_to_solo(built):
-    """Batched WAND (one job, shared decodes) must be rank/score-
-    identical to per-query search for every query in the batch."""
+    """A batch (one job, shared decodes) must be rank/score-identical
+    to per-query search and to the oracle for every query in it."""
     _, searcher, oracle, _ = built
     terms = _terms_by_df(oracle, 6)
     batch = {
@@ -123,10 +126,9 @@ def test_search_many_identical_to_solo(built):
         exp = searcher.search(q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got[qid]] == [
             (d.docid, np.float32(d.score)) for d in exp], qid
-        if qid != "absent":
-            oexp = oracle.search(q, 12)
-            assert [(d.docid, np.float32(d.score)) for d in got[qid]] == [
-                (d.docid, np.float32(d.score)) for d in oexp], qid
+        oexp = oracle.search(q, 12)
+        assert [(d.docid, np.float32(d.score)) for d in got[qid]] == [
+            (d.docid, np.float32(d.score)) for d in oexp], qid
 
 
 def test_msm_disjunction(built):
@@ -168,10 +170,9 @@ def test_kill_and_resume_identical(spark, tmp_path_factory, built):
 
 
 def test_boolean_mixes_identical_to_oracle(built):
-    """MUST/FILTER/MUST_NOT on the compressed path (block-max
-    conjunction, Boolean2ScorerSupplier.java:93-164 /
-    BlockMaxConjunctionScorer.java role): rank/score identity vs the
-    pure-Python oracle AND vs exhaustive (WAND off) evaluation."""
+    """MUST/FILTER/MUST_NOT on the compressed path
+    (Boolean2ScorerSupplier.java:93-164 rules): rank/score identity vs
+    the pure-Python oracle."""
     _, searcher, oracle, _ = built
     t = _terms_by_df(oracle, 6)
     cases = {
@@ -204,12 +205,9 @@ def test_boolean_mixes_identical_to_oracle(built):
     }
     for name, q in cases.items():
         exp = oracle.search(q, 12)
-        got = searcher.search(q, 12, use_wand=True)
-        exhaustive = searcher.search(q, 12, use_wand=False)
+        got = searcher.search(q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], name
-        assert [(d.docid, np.float32(d.score)) for d in got] == [
-            (d.docid, np.float32(d.score)) for d in exhaustive], name
 
 
 def test_boolean_mixes_batched_identical(built):
@@ -266,7 +264,7 @@ def _bigram(pdf):
 def test_phrase_identical_to_oracle(built):
     """Exact + sloppy phrases on the compressed path (standalone and
     inside boolean mixes): rank/score identity vs the pure-Python
-    oracle AND vs exhaustive (WAND off) evaluation."""
+    oracle."""
     from lucene_solr_spark.search.queries import PhraseQuery
 
     _, searcher, oracle, pdf = built
@@ -295,12 +293,9 @@ def test_phrase_identical_to_oracle(built):
     }
     for name, q in cases.items():
         exp = oracle.search(q, 12)
-        got = searcher.search(q, 12, use_wand=True)
-        exhaustive = searcher.search(q, 12, use_wand=False)
+        got = searcher.search(q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], name
-        assert [(d.docid, np.float32(d.score)) for d in got] == [
-            (d.docid, np.float32(d.score)) for d in exhaustive], name
 
 
 def test_phrase_batched_identical(built):
@@ -359,18 +354,16 @@ def test_concurrent_chunks_bit_identical(spark, tmp_path_factory):
         (d.docid, np.float32(d.score)) for d in b]
 
 
-def test_batch_tree_path_identical_to_wand(built):
-    """Batches >= BATCH_TREE_MIN run the compiled-tree exhaustive
-    leaf; results must be rank/score-identical to the per-query WAND
-    traversal (pruning and batching are optimizations, never
-    semantics)."""
+def test_batch_identical_to_solo_and_oracle(built):
+    """A 20-query batch (shared bulk decodes in one leaf per segment)
+    must be rank/score-identical to per-query search and to the oracle
+    (batching is an optimization, never semantics)."""
     from lucene_solr_spark.search.queries import PhraseQuery
-    from lucene_solr_spark.search.wand import SegmentSearcher
 
     idx, searcher, oracle, pdf = built
     terms = _terms_by_df(oracle, 8)
     qs = {}
-    for i in range(max(SegmentSearcher.BATCH_TREE_MIN, 20)):
+    for i in range(20):
         a, b = terms[i % len(terms)], terms[(i * 3 + 1) % len(terms)]
         if i % 4 == 0:
             qs[f"q{i}"] = TermQuery(a)
@@ -384,12 +377,14 @@ def test_batch_tree_path_identical_to_wand(built):
             qs[f"q{i}"] = BooleanQuery.of(
                 must=[TermQuery(a)],
                 should=[PhraseQuery((b, a)), TermQuery(b)])
-    assert len(qs) >= SegmentSearcher.BATCH_TREE_MIN
     batched = searcher.search_many(qs, 10)
     for qid, q in qs.items():
-        solo = searcher.search(q, 10)  # WAND traversal (or general path)
+        solo = searcher.search(q, 10)
         assert [(d.docid, np.float32(d.score)) for d in batched[qid]] == [
             (d.docid, np.float32(d.score)) for d in solo], qid
+        exp = oracle.search(q, 10)
+        assert [(d.docid, np.float32(d.score)) for d in batched[qid]] == [
+            (d.docid, np.float32(d.score)) for d in exp], qid
 
 
 def test_multi_phrase_on_v2(built):

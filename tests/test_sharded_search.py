@@ -78,7 +78,7 @@ def test_unknown_stats_mode(sharded):
 
 def test_batched_scatter_gather_exact(sharded):
     """search_many over shards: one batched job per shard (the
-    tree-batch leaf for >=16 queries), global stats round, TopDocs
+    tree-batch leaf), global stats round, TopDocs
     merge — bit-identical to the monolithic oracle per query."""
     from lucene_solr_spark.search.sharded import ShardedSearcher
 
@@ -155,7 +155,7 @@ def test_exact_stats_multifield_batched(sharded_mf):
     s = ShardedSearcher(roots, spark, stats="exact", cache=True)
     by_df = _probes(oracle)
     qs = {}
-    for i in range(18):  # >= BATCH_TREE_MIN: tree-batch leaf
+    for i in range(18):
         qs[f"q{i}"] = BooleanQuery.of(
             must=[TermQuery(["python", "java", "go"][i % 3], field="title")],
             should=[TermQuery(by_df[-(1 + i % 7)])])

@@ -1,9 +1,8 @@
-"""Phrases on the compressed block-max WAND path (VERDICT round-2
-next-round #4, phrase part): exact + sloppy PhraseQuery, standalone and
-as MUST/SHOULD/FILTER/MUST_NOT clauses of a BooleanQuery, evaluated
-inside segment_topk's windowed traversal — identity vs a naive
-exhaustive evaluator over a synthetic codec-v2 segment (no Spark), with
-WAND pruning on AND off.
+"""Phrases on the compressed v2 path (VERDICT round-2 next-round #4,
+phrase part): exact + sloppy PhraseQuery, standalone and as
+MUST/SHOULD/FILTER/MUST_NOT clauses of a BooleanQuery, evaluated by
+segment_eval_topk over a compiled tuple tree — identity vs a naive
+per-doc evaluator over a synthetic codec-v2 segment (no Spark).
 
 Scoring parity target: the same float32 discipline as the uncompressed
 engine's _phrase_verify_fn (weight from summed member idfs,
@@ -17,7 +16,7 @@ import pytest
 from lucene_solr_spark.index import codec
 from lucene_solr_spark.search import bm25
 from lucene_solr_spark.search.sloppy import sloppy_freq
-from lucene_solr_spark.search.wand import _phrase_freqs, segment_topk
+from lucene_solr_spark.search.wand import _phrase_freqs, segment_eval_topk
 from lucene_solr_spark.util.smallfloat import int_to_byte4
 
 RNG = np.random.default_rng(7)
@@ -65,11 +64,6 @@ def _encode_segment(docs, segment=0):
                 "norms": norms.tobytes(),
                 "positions": codec.encode_positions(
                     [np.array(by_doc[d], dtype=np.int64) for d in blk]),
-                # impacts: every (tf, norm) pair — sound (max is exact)
-                "imp_tfs": codec.encode_seq(tfs.astype(np.uint64),
-                                            prefer_packed=False),
-                "imp_norms": codec.encode_seq(norms.astype(np.uint64),
-                                              prefer_packed=False),
             })
     return pd.DataFrame(rows)
 
@@ -157,14 +151,27 @@ def _naive(docs, scorer, df, term_weights=(), phrase_specs=(),
             [np.float32(out_s[i]) for i in order])
 
 
+def _tree(term_weights=(), phrase_specs=(), must=(), filters=(),
+          excludes=(), need=0):
+    """The compiled tuple tree SegmentSearcher._compile_general emits
+    for the same clauses (non-scoring clauses carry weight 1.0)."""
+    kids = [("MUST" if t in must else "SHOULD", ("term", t, w))
+            for t, w in term_weights]
+    kids += [(occ, ("phrase", terms, tuple(offs), slop,
+                    1.0 if w is None else w))
+             for terms, offs, slop, w, occ in phrase_specs]
+    kids += [("FILTER", ("term", t, 1.0)) for t in sorted(filters)]
+    kids += [("MUST_NOT", ("term", t, 1.0)) for t in sorted(excludes)]
+    if len(kids) == 1 and kids[0][0] == "MUST" and not need:
+        return kids[0][1]  # a bare PhraseQuery compiles to its leaf
+    return ("bool", tuple(kids), need)
+
+
 def _run(seg, term_weights=(), phrase_specs=(), must=(), filters=(),
-         excludes=(), need=0, k=10, use_wand=True):
+         excludes=(), need=0, k=10):
     docs, blocks, scorer, df = seg
-    d, s = segment_topk(
-        blocks, dict(term_weights), scorer.cache, k,
-        min_should_match=need, use_wand=use_wand,
-        must=frozenset(must), filters=frozenset(filters),
-        excludes=frozenset(excludes), phrases=tuple(phrase_specs))
+    tree = _tree(term_weights, phrase_specs, must, filters, excludes, need)
+    d, s = segment_eval_topk(blocks, tree, scorer.cache, k)
     return list(d), [np.float32(x) for x in s]
 
 
@@ -175,20 +182,18 @@ def test_exact_phrase_standalone(seg):
     docs, blocks, scorer, df = seg
     w = _phrase_weight(scorer, df, PHRASE)
     spec = [(PHRASE, (0, 1), 0, w, "MUST")]
-    for use_wand in (True, False):
-        got = _run(seg, phrase_specs=spec, use_wand=use_wand)
-        exp = _naive(docs, scorer, df, phrase_specs=spec)
-        assert got == exp
+    got = _run(seg, phrase_specs=spec)
+    exp = _naive(docs, scorer, df, phrase_specs=spec)
+    assert got == exp
 
 
 def test_sloppy_phrase_standalone(seg):
     docs, blocks, scorer, df = seg
     w = _phrase_weight(scorer, df, PHRASE, boost=1.3)
     spec = [(PHRASE, (0, 1), 2, w, "MUST")]
-    for use_wand in (True, False):
-        got = _run(seg, phrase_specs=spec, use_wand=use_wand)
-        exp = _naive(docs, scorer, df, phrase_specs=spec)
-        assert got == exp
+    got = _run(seg, phrase_specs=spec)
+    exp = _naive(docs, scorer, df, phrase_specs=spec)
+    assert got == exp
 
 
 def test_phrase_with_position_gap(seg):
@@ -208,11 +213,9 @@ def test_phrase_must_plus_term_should(seg):
     w = _phrase_weight(scorer, df, PHRASE)
     tw = [("gamma", float(scorer.weight(df["gamma"])))]
     spec = [(PHRASE, (0, 1), 0, w, "MUST")]
-    for use_wand in (True, False):
-        got = _run(seg, term_weights=tw, phrase_specs=spec,
-                   use_wand=use_wand)
-        exp = _naive(docs, scorer, df, term_weights=tw, phrase_specs=spec)
-        assert got == exp
+    got = _run(seg, term_weights=tw, phrase_specs=spec)
+    exp = _naive(docs, scorer, df, term_weights=tw, phrase_specs=spec)
+    assert got == exp
 
 
 def test_phrase_should_msm(seg):

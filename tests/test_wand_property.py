@@ -1,7 +1,7 @@
 """Property test: random boolean/dismax/phrase trees evaluate
-identically on SegmentSearcher (compressed codec, WAND or compiled
-tree) and the pure-Python oracle — the round-4 algebra widening's
-fuzz gate."""
+identically on SegmentSearcher (compressed codec, compiled tree; the
+serving path and a one-query distributed batch) and the pure-Python
+oracle — the round-4 algebra widening's fuzz gate."""
 
 import numpy as np
 import pytest
@@ -90,11 +90,13 @@ def test_random_trees_identical(built, data):
     searcher, oracle, terms = built
     q = data.draw(_tree_strategy(terms))
     exp = oracle.search(q, 10)
-    # serving path: fast in-driver evaluation (same compiled tree as
-    # the distributed leaves, whose identity the named suites pin)
+    want = [(d.docid, np.float32(d.score)) for d in exp]
+    # serving path: in-driver evaluation of the compiled tree
     got = searcher.search_local(q, 10)
-    assert [(d.docid, np.float32(d.score)) for d in got] == [
-        (d.docid, np.float32(d.score)) for d in exp], q
+    assert [(d.docid, np.float32(d.score)) for d in got] == want, q
+    # the same tree through a one-query distributed batch
+    got = searcher.search_many({"q": q}, 10)["q"]
+    assert [(d.docid, np.float32(d.score)) for d in got] == want, q
 
 
 def test_msm_unreachable_matches_nothing(built):
@@ -125,8 +127,10 @@ def test_msm_unreachable_matches_nothing(built):
         assert oracle.search(q, 10) == [], q
         assert searcher.search_local(q, 10) == [], q
         assert searcher.search_df(q, 10).count() == 0, q
-        batch = searcher.search_many({f"q{i}": q for i in range(17)}, 10)
-        assert all(v == [] for v in batch.values()), q
+        for n in (1, 17):
+            batch = searcher.search_many(
+                {f"q{i}": q for i in range(n)}, 10)
+            assert all(v == [] for v in batch.values()), (n, q)
     # sanity: one surviving SHOULD satisfying msm=1 still matches
     ok = BooleanQuery.of(must=[TermQuery(t_exist)],
                          should=[TermQuery("zzzznotaterm"),
