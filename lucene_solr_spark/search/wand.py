@@ -1016,7 +1016,8 @@ class SegmentSearcher:
         (ForUtil.java:41 role) and evaluates every query's compiled
         tree back-to-back over the shared decodes. Per-leaf top-k
         arrays then a global per-query window merge (TopDocs.merge,
-        TopDocs.java:188-230) of <= segments * |queries| * k rows.
+        TopDocs.java:188-230) of <= segments * |queries| * k rows,
+        giving ``(qid, docid, score, rn)``.
 
         Scaling: task = (segment x whole batch) — minutes of pure
         numpy decode/score CPU per task at real batch sizes, no big
@@ -1025,7 +1026,13 @@ class SegmentSearcher:
         of executor count.
 
         ``stats``: optional qualified-term → global df override (the
-        distributed ExactStatsCache hook, like search_df's)."""
+        distributed ExactStatsCache hook, like search_df's).
+
+        ``_raw``: return the un-merged per-leaf top-k frame
+        ``(qidx, docid, score)`` instead — ``qidx`` indexes the batch's
+        query order, each (segment, query) contributes <= k rows, and
+        no window merge or qid join is planned. ``search_many`` merges
+        it on the driver."""
         spark = self.index.spark
         qid_list = list(queries)
         # compiled-plan cache (the queryResultCache role, at plan
@@ -1066,8 +1073,8 @@ class SegmentSearcher:
         norm_fields = sorted(norm_fields)
         if all(t[0] == "none" for t in trees):
             return spark.createDataFrame(
-                [], ("qidx int" if _raw else "qid string")
-                    + ", docid long, score float, rn int")
+                [], "qidx int, docid long, score float" if _raw
+                else "qid string, docid long, score float, rn int")
         caches = self.caches
         deleted = self.deleted if self.deleted.size else None
         kk = int(k)
@@ -1112,22 +1119,20 @@ class SegmentSearcher:
                 "docid": np.concatenate(out_d),
                 "score": pd.Series(np.concatenate(out_s), dtype="float32")})
 
-        per_seg = self._block_scan(trees, norm_fields).groupBy(
+        out = self._block_scan(trees, norm_fields).groupBy(
             "segment").applyInPandas(leaf, "qidx int, docid long, score float")
-        from pyspark.sql.window import Window
+        if not _raw:
+            from pyspark.sql.window import Window
 
-        win = Window.partitionBy("qidx").orderBy(
-            F.desc("score"), F.asc("docid"))
-        topk = (per_seg.select(
-            "qidx", "docid", "score", F.row_number().over(win).alias("rn"))
-            .where(F.col("rn") <= kk))
-        if _raw:
-            out = topk
-        else:
+            win = Window.partitionBy("qidx").orderBy(
+                F.desc("score"), F.asc("docid"))
             qmap_df = spark.createDataFrame(pd.DataFrame(
                 {"qidx": pd.array(range(len(qid_list)), dtype="int32"),
                  "qid": qid_list}))
-            out = (topk.join(F.broadcast(qmap_df), "qidx")
+            out = (out.select("qidx", "docid", "score",
+                              F.row_number().over(win).alias("rn"))
+                   .where(F.col("rn") <= kk)
+                   .join(F.broadcast(qmap_df), "qidx")
                    .select("qid", "docid", "score", "rn"))
         self._plan_cache_put(cache_key, out)
         return out
@@ -1135,12 +1140,29 @@ class SegmentSearcher:
     def search_many(self, queries: dict[str, Query], k: int = 10,
                     stats: dict[str, int] | None = None
                     ) -> dict[str, list[TopDoc]]:
-        rows = self.search_many_df(queries, k, _raw=True,
-                                   stats=stats).collect()
+        """``search_many_df`` as ``{qid: [TopDoc]}``. The per-leaf
+        top-k rows (<= segments * |queries| * k) are merged HERE, on
+        the driver — Lucene's coordinator-side TopDocs.merge: one sort
+        by (query, score desc, docid asc), then the first k of each
+        query. That skips the distributed window merge's extra
+        shuffle, sort stage and second job."""
+        pdf = self.search_many_df(queries, k, _raw=True,
+                                  stats=stats).toPandas()
+        qi = pdf["qidx"].to_numpy(dtype=np.int64)
+        d = pdf["docid"].to_numpy(dtype=np.int64)
+        sc = pdf["score"].to_numpy(dtype=np.float32)
+        order = np.lexsort((d, -sc, qi))
+        qi, d, sc = qi[order], d[order], sc[order]
+        # rank of each row within its query's run of the sorted rows
+        first = np.flatnonzero(np.r_[True, qi[1:] != qi[:-1]])
+        rank = np.arange(qi.size) - np.repeat(
+            first, np.diff(np.r_[first, qi.size]))
+        keep = rank < int(k)
         qid_list = list(queries)
         out: dict[str, list[TopDoc]] = {qid: [] for qid in queries}
-        for r in sorted(rows, key=lambda r: (r["qidx"], r["rn"])):
-            out[qid_list[r["qidx"]]].append(TopDoc(r["docid"], r["score"]))
+        for q, di, si in zip(qi[keep].tolist(), d[keep].tolist(),
+                             sc[keep].tolist()):
+            out[qid_list[q]].append(TopDoc(di, si))
         return out
 
 

@@ -112,6 +112,7 @@ def main():
         .appName("oracle-check")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.python.daemon.module", "lucene_solr_spark.warm_daemon")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")

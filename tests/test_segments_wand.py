@@ -809,3 +809,64 @@ def test_paging_elevation_expand_diversified_over_v2(built):
                              max_per_key=1).collect()
     keys = [r["repo"] for r in div]
     assert len(keys) == len(set(keys))
+
+
+@pytest.fixture(scope="module")
+def dup_built(spark, tmp_path_factory):
+    """Three copies of a small corpus under different repos, so every
+    document's duplicates sit in other segments (8 docs each) and tie
+    with it exactly on score."""
+    import pandas as pd
+
+    base = corpus_pandas(24)
+    pdf = (pd.concat([base.assign(repo=f"copy{c}/" + base["repo"])
+                      for c in range(3)])
+           .sort_values(["repo", "path", "commit"]).reset_index(drop=True))
+    root = str(tmp_path_factory.mktemp("segidx_dup"))
+    idx = build_segment_index(spark.createDataFrame(pdf), root,
+                              stop_words=ENGLISH_STOP_WORDS,
+                              docs_per_segment=8)
+    oracle = OracleIndex(analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
+    oracle.add_all(pdf["content"])
+    return SegmentSearcher(idx, cache=True), oracle
+
+
+def test_search_many_driver_merge(dup_built):
+    """search_many merges the per-leaf top-k on the driver: ties at the
+    k-th place across segments resolve by docid ascending, k past the
+    hit count returns every hit, a no-hit query returns [], and every
+    query equals search_many_df's rows in rn order and the oracle."""
+    searcher, oracle = dup_built
+    assert searcher.index.manifest()["n_segments"] == 9
+    by_df = sorted((t for _f, t in oracle.postings),
+                   key=lambda t: (oracle.doc_freq(t), t))
+    rare, common = by_df[0], by_df[-1]
+    assert oracle.doc_freq(rare) == 3   # one doc, three copies
+    docs_of = {t: {p[0] for p in ps} for (_f, t), ps in oracle.postings.items()}
+    apart = next(t for t in by_df if not docs_of[t] & docs_of[rare])
+    batch = {
+        "common": TermQuery(common),
+        "rare": TermQuery(rare),
+        "dis": BooleanQuery.of(should=[TermQuery(common), TermQuery(rare),
+                                       TermQuery(by_df[len(by_df) // 2])]),
+        "nohit": BooleanQuery.of(must=[TermQuery(rare), TermQuery(apart)]),
+        "absent": TermQuery("zz_not_a_term"),
+    }
+    for k in (1, 2, 4, 5, 50):
+        got = searcher.search_many(batch, k)
+        assert list(got) == list(batch)
+        rows = sorted(searcher.search_many_df(batch, k).collect(),
+                      key=lambda r: (r["qid"], r["rn"]))
+        for qid, q in batch.items():
+            g = [(d.docid, np.float32(d.score)) for d in got[qid]]
+            assert g == [(r["docid"], np.float32(r["score"]))
+                         for r in rows if r["qid"] == qid], (qid, k)
+            assert g == [(d.docid, np.float32(d.score))
+                         for d in oracle.search(q, k)], (qid, k)
+        assert got["nohit"] == got["absent"] == []
+        assert len(got["rare"]) == min(k, 3)
+        if k == 2:  # the k-th place cuts a three-way tie
+            assert got["rare"][0].score == got["rare"][1].score
+    none = {"a": TermQuery("zz_absent_a"), "b": TermQuery("zz_absent_b")}
+    assert searcher.search_many(none, 10) == {"a": [], "b": []}
+    assert searcher.search_many_df(none, 10).count() == 0
